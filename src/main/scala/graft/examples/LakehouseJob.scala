@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DataQuality, Layout}
-import graft.sources.{AnalysisStore, SchemaDrift, VersionedStore}
+import graft.sources.{AnalysisStore, CatalogStore, SchemaDrift}
 
 /** Whole-lifecycle example for the table-management layer — how the
   * round-8 pieces compose into the maintenance loop a 100 TB
@@ -23,8 +23,9 @@ import graft.sources.{AnalysisStore, SchemaDrift, VersionedStore}
   *  4. INDEX: refresh the per-file min/max skipping index
   *     incrementally — only files not yet indexed are scanned
   *     ([[Layout.fileIndexDelta]]);
-  *  5. SNAPSHOT: publish the serving view into the versioned store
-  *     (time travel + instant rollback, [[VersionedStore]]).
+  *  5. SNAPSHOT: commit the serving view as table [[SnapshotTable]]
+  *     of a one-table catalog (time travel + data-free restore,
+  *     [[CatalogStore]]).
   *
   * Serving reads then go through [[readServing]]: pruned to the
   * files whose bounding box intersects the predicate — the index
@@ -35,7 +36,11 @@ import graft.sources.{AnalysisStore, SchemaDrift, VersionedStore}
   */
 object LakehouseJob {
 
+  /** `snapshots` is a [[CatalogStore]] root. */
   final case class Paths(table: String, index: String, snapshots: String)
+
+  /** The one table of the `snapshots` catalog. */
+  val SnapshotTable = "serving"
 
   final case class TickReport(
       admitted: Boolean, driftViolations: Seq[SchemaDrift.Drift],
@@ -97,12 +102,12 @@ object LakehouseJob {
     AnalysisStore.stageAndSwap(spark, paths.index)(
       staging => nextIndex.write.parquet(staging))
 
-    // 5. SNAPSHOT — versioned serving copy
-    val v = VersionedStore.publish(spark, paths.snapshots,
-      spark.read.parquet(paths.table))
+    // 5. SNAPSHOT — versioned serving copy, catalog version 1, 2, …
+    val tx = CatalogStore.commit(spark, paths.snapshots,
+      Map(SnapshotTable -> spark.read.parquet(paths.table)))
 
     TickReport(admitted = true, Nil, published = true, Nil,
-      optimized, newCount, Some(v))
+      optimized, newCount, tx.version)
   }
 
   /** Serving read: file-skipping through the maintained index. */

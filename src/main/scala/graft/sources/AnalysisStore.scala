@@ -197,16 +197,34 @@ object AnalysisStore {
       write: String => Unit): Unit = {
     val fs = fsOf(spark, path)
     recover(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
     val staging = new org.apache.hadoop.fs.Path(path + "__staging")
     fs.delete(staging, true)
     write(staging.toString)
+    swap(fs, path, staging)
+  }
+
+  /** The rename choreography [[stageAndSwap]] and [[writeAuditPublish]]
+    * share: back the live table up to `__old`, rename staging in, drop
+    * the backup. Each rename's Boolean is checked — HDFS reports
+    * failure as `false`, not an exception — and a failure throws
+    * before anything is deleted: an ignored failed backup rename
+    * would let the next rename move staging INTO the live dir, and an
+    * ignored failed install would delete the only copy. A throw after
+    * the backup rename leaves `__old` for [[recover]].
+    */
+  private def swap(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      staging: org.apache.hadoop.fs.Path): Unit = {
+    val target = new org.apache.hadoop.fs.Path(path)
     val backup = new org.apache.hadoop.fs.Path(path + "__old")
     fs.delete(backup, true)
     // first-ever publish: nothing to back up (local FS rename of a
     // missing source throws rather than returning false)
-    if (fs.exists(target)) fs.rename(target, backup)
-    fs.rename(staging, target)
+    if (fs.exists(target) && !fs.rename(target, backup))
+      throw new IllegalStateException(
+        s"swap failed: could not rename $target -> $backup")
+    if (!fs.rename(staging, target))
+      throw new IllegalStateException(
+        s"swap failed: could not rename $staging -> $target")
     fs.delete(backup, true)
   }
 
@@ -242,7 +260,6 @@ object AnalysisStore {
       " just a write — call stageAndSwap/writeFull instead")
     val fs = fsOf(spark, path)
     recover(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
     val staging = new org.apache.hadoop.fs.Path(path + "__staging")
     fs.delete(staging, true)
     write(staging.toString)
@@ -254,11 +271,7 @@ object AnalysisStore {
       fs.delete(staging, true)
       WapResult(published = false, failed)
     } else {
-      val backup = new org.apache.hadoop.fs.Path(path + "__old")
-      fs.delete(backup, true)
-      if (fs.exists(target)) fs.rename(target, backup)
-      fs.rename(staging, target)
-      fs.delete(backup, true)
+      swap(fs, path, staging)
       WapResult(published = true, Nil)
     }
   }

@@ -2,14 +2,16 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Multi-table transactional catalog — the cross-TABLE atomicity
-  * layer [[VersionedStore]] (one table) and
-  * [[AnalysisStore.writeAuditPublish]] (one write) stop short of:
-  * one commit publishes N tables and a reader can NEVER observe a
-  * mix of old-A with new-B (the Nessie/"multi-table transaction"
-  * gap in first-generation lakehouse formats — a report joining a
-  * fact to its freshly-republished dim across a torn boundary is
-  * wrong in a way no per-table guarantee can catch).
+/** Multi-table transactional catalog — the store tier's one
+  * versioned-publish protocol (a single-table versioned store is a
+  * one-table catalog: `commit(root, Map(name -> df))`), and the
+  * cross-TABLE atomicity layer [[AnalysisStore.writeAuditPublish]]
+  * (one write) stops short of: one commit publishes N tables and a
+  * reader can NEVER observe a mix of old-A with new-B (the
+  * Nessie/"multi-table transaction" gap in first-generation
+  * lakehouse formats — a report joining a fact to its
+  * freshly-republished dim across a torn boundary is wrong in a way
+  * no per-table guarantee can catch).
   *
   * Layout — immutability everywhere, one mutable pointer:
   * {{{
@@ -60,8 +62,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * 100 TB shape: the catalog file is |tables| lines and the commit's
   * data cost is exactly the tables it rewrites — right for the
-  * serving tier's analysis tables (VersionedStore's contract), with
-  * consistency now spanning the whole report surface.
+  * serving tier's analysis tables, with consistency spanning the
+  * whole report surface.
   */
 object CatalogStore {
 
@@ -831,7 +833,7 @@ object CatalogStore {
     * table) across every COMPLETE catalog file — which transaction
     * published which table version, and which catalog the pointer
     * currently serves. Registered as a temp view (or joined to
-    * [[VersionedStore.versions]]-style listings) this is the audit
+    * [[catalogVersions]]-style listings) this is the audit
     * query "when did table X last change and what rode in that
     * transaction". Driver-built by design: catalog files are
     * |versions| metadata files of |tables| lines each — model-sized,

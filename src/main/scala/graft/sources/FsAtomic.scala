@@ -1,8 +1,8 @@
 package graft.sources
 
 /** The filesystem primitives every claim/flip protocol here leans
-  * on, in one place so [[CatalogStore]] and [[VersionedStore]] cannot
-  * drift apart on atomicity:
+  * on, in one place so [[CatalogStore]]'s claims, catalog files,
+  * pointer and ref files cannot drift apart on atomicity:
   *
   *  - [[createExclusive]]: atomically create an empty file, failing
   *    if it exists — THE exclusive-claim primitive. HDFS's

@@ -429,4 +429,55 @@ class AnalysisStoreSpec extends SparkSpec {
     assert(r.published && spark.read.parquet(path).count() == 1)
   }
 
+  test("swap: a rename that reports false throws before anything is " +
+      "deleted, leaving __old for recover") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.falserename.impl", classOf[FalseRenameFs].getName)
+    val local = Files.createTempDirectory("swapfail").resolve("t").toString
+    Seq(1L, 2L).toDF("x").write.parquet(local)
+    val path = "falserename:" + local
+    // staging bytes go through file://, only the swap sees FalseRenameFs
+    val stage = (st: String) => Seq(3L).toDF("x")
+      .write.parquet(new org.apache.hadoop.fs.Path(st).toUri.getPath)
+    def live = spark.read.parquet(local).as[Long].collect().sorted.toSeq
+    try {
+      // backup rename refused: ignoring it would rename staging INTO
+      // the live dir
+      FalseRenameFs.refuse = Set("t")
+      intercept[IllegalStateException] {
+        AnalysisStore.stageAndSwap(spark, path)(stage)
+      }
+      assert(live == Seq(1L, 2L))
+      assert(!new java.io.File(local, "t__staging").exists())
+      // install rename refused: ignoring it would delete the backup,
+      // the only copy left
+      FalseRenameFs.refuse = Set("t__staging")
+      intercept[IllegalStateException] {
+        AnalysisStore.writeAuditPublish(spark, path,
+          Seq[(String, org.apache.spark.sql.DataFrame => Boolean)](
+            "nonempty" -> (df => !df.isEmpty)))(stage)
+      }
+      assert(!new java.io.File(local).exists() &&
+        new java.io.File(local + "__old").exists())
+    } finally FalseRenameFs.refuse = Set.empty
+    assert(AnalysisStore.recover(spark, local))
+    assert(live == Seq(1L, 2L))
+  }
+
+}
+
+/** A local filesystem under the `falserename:` scheme whose `rename`
+  * reports failure the HDFS way — `false`, no exception — for sources
+  * named in [[FalseRenameFs.refuse]].
+  */
+class FalseRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("falserename:///")
+  override def getScheme: String = "falserename"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !FalseRenameFs.refuse.contains(src.getName) && super.rename(src, dst)
+}
+
+object FalseRenameFs {
+  @volatile var refuse: Set[String] = Set.empty
 }

@@ -155,6 +155,14 @@ class CatalogDmlSpec extends SparkSpec {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }.isEmpty)
     assertSameRows(carried, Seq((7, "unchanged")).toDF("k", "status"))
+    // the feed reads version dirs, not the pointer: a restore leaves
+    // an already-committed pair's feed unchanged
+    CatalogStore.restore(spark, root, 1)
+    assertSameRows(
+      CatalogStore.changesBetween(spark, root, "t", 1, 3,
+        "k", "content"),
+      Seq((1, "removed"), (2, "modified"), (3, "unchanged"),
+        (4, "added")).toDF("k", "status"))
   }
 
   test("restore: a data-free FORWARD commit republishes an older " +
@@ -189,7 +197,18 @@ class CatalogDmlSpec extends SparkSpec {
     // and restoring forward to the newest works symmetrically
     CatalogStore.restore(spark, root, 5)
     assert(CatalogStore.snapshot(spark, root).tables.contains("oops"))
+    // a restore to a version that does not exist fails loudly and
+    // publishes nothing
+    val beforeBad = CatalogStore.snapshot(spark, root)
     intercept[Exception] { CatalogStore.restore(spark, root, 99) }
+    assert(CatalogStore.snapshot(spark, root) == beforeBad)
+    // a commit after a restore never reuses a live number: t's new
+    // version lands above every version dir t has
+    val dirs = new java.io.File(root, "t").list()
+      .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toInt)
+    val next = CatalogStore.commit(spark, root, Map("t" -> good)).version.get
+    assert(dirs.nonEmpty && dirs.forall(_ < next))
+    assert(CatalogStore.snapshot(spark, root).tables("t") == next)
   }
 
   test("optimizeTable: small files compact into a new version, rows " +

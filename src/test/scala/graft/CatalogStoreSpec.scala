@@ -148,9 +148,15 @@ class CatalogStoreSpec extends SparkSpec {
     // simulate a JVM crash between the tmp create and its rename
     fs.create(new org.apache.hadoop.fs.Path(root, "_cat/c=2.tmp"), false)
       .close()
+    // ...and a stale pointer tmp naming a bogus version: the next
+    // flip overwrites it and lands
+    val ptrTmp = fs.create(
+      new org.apache.hadoop.fs.Path(root, "_cat_current.tmp.2"), false)
+    ptrTmp.write("999".getBytes("UTF-8")); ptrTmp.close()
     assert(CatalogStore.catalogVersions(spark, root) == Seq(1))
     assert(CatalogStore.commit(spark, root, Map("a" -> orders.limit(5)))
       .version.contains(2))
+    assert(CatalogStore.currentVersion(spark, root).contains(2))
     assert(CatalogStore.vacuum(spark, root, keep = 1).catalogs == Seq(1))
   }
 

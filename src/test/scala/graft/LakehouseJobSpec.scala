@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.examples.LakehouseJob
 import graft.operators.Layout
-import graft.sources.VersionedStore
+import graft.sources.CatalogStore
 
 /** The whole-lifecycle run of the table-management layer: admit →
   * publish (audited) → optimize → index → snapshot, then serve
@@ -50,7 +50,10 @@ class LakehouseJobSpec extends SparkSpec {
       spark.read.parquet(p.table).select(col("_metadata.file_path"))
         .distinct().count())
     // snapshots: version 1 still serves the 500-row world
-    assert(VersionedStore.read(spark, p.snapshots, Some(1)).count() == 500)
+    assert(CatalogStore.read(spark, p.snapshots, LakehouseJob.SnapshotTable,
+      CatalogStore.snapshot(spark, p.snapshots, Some(1))).count() == 500)
+    assert(CatalogStore.readCurrent(spark, p.snapshots,
+      LakehouseJob.SnapshotTable).count() == 1000)
   }
 
   test("audit failure leaves the live table and snapshots untouched") {
@@ -64,7 +67,7 @@ class LakehouseJobSpec extends SparkSpec {
     assert(r.admitted && !r.published &&
       r.failedAudits == Seq("in_range(price)"))
     assert(spark.read.parquet(p.table).count() == before)
-    assert(VersionedStore.versions(spark, p.snapshots) == Seq(1))
+    assert(CatalogStore.catalogVersions(spark, p.snapshots) == Seq(1))
   }
 
   test("schema drift (retype) is refused before anything is written") {
