@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark main (driver contract): run every registered
   * query on SPARK_GRAFT_SF_DIR, print ONE JSON line.
@@ -10,6 +10,11 @@ import org.apache.spark.sql.SparkSession
   * materializes every output row, so the timing covers the real work.
   * First a warmup query JIT-compiles the read path so measured times
   * aren't dominated by first-touch classloading.
+  *
+  * A query that throws is reported by name under `failed`, never as a
+  * timing: its wall is the time it took to fail, and summing it into
+  * `total` would credit a broken query as a fast one. Any failure
+  * makes the process exit 1, after the result line.
   */
 object Bench {
 
@@ -27,6 +32,83 @@ object Bench {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
 
+  /** What a timed sweep measured: the minimum wall over the repeats
+    * of every query that never threw, and the names of those that
+    * threw in any repeat (left out of the timings).
+    */
+  private[graft] final case class Sweep(timings: Seq[(String, Double)],
+      failed: Seq[String])
+
+  /** Run `queries` `repeat` times through the `noop` sink, one stderr
+    * diagnostics row per run.
+    */
+  private[graft] def sweep(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      repeat: Int): Sweep = {
+    // wall vs process-CPU vs GC diagnostics per query: if a query's
+    // wall time balloons while cpu/wall stays far below the core
+    // count and GC is idle, the slowdown is host-external (another
+    // tenant / scheduler stall), not this plan — that distinction is
+    // what separates "optimize the query" from "rerun the bench"
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    def gcMillis: Long = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+        .asScala.map(_.getCollectionTime).sum
+    }
+    def codeCacheUsedMb: Long = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+        .filter(_.getName.contains("CodeHeap")).map(_.getUsage.getUsed).sum / (1 << 20)
+    }
+    // scheduler-level per-query diagnostics (stderr only): job/stage/
+    // task counts + summed task time + shuffle bytes — the UI-less
+    // substitute for the stage table. taskTime ≈ wall × cores ⇒
+    // compute-bound; jobs high with taskTime ≪ wall ⇒ protocol-bound
+    // (sequential tiny actions), the two different optimization paths.
+    val metrics = BenchMetrics.install(spark.sparkContext)
+    var sinceGc = 0
+    val runs = try (1 to repeat).flatMap { _ =>
+      queries.map { case (name, fn) =>
+        org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+        metrics.reset()
+        val t0 = System.nanoTime()
+        val cpu0 = osBean.getProcessCpuTime
+        val gc0 = gcMillis
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            false
+          }
+        val dt = (System.nanoTime() - t0) / 1e9
+        val cpuS = (osBean.getProcessCpuTime - cpu0) / 1e9
+        org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+        System.err.println(f"[bench] $name%-28s wall=$dt%8.2fs cpu=$cpuS%8.1fs " +
+          f"(${cpuS / dt}%4.1f cores) gc=${(gcMillis - gc0) / 1000.0}%6.1fs " +
+          f"codecache=${codeCacheUsedMb}%4dMB ${metrics.line}" +
+          (if (ok) "" else " (threw)"))
+        // isolate queries: drop persisted blocks an operator may have
+        // left behind (e.g. minhash's shingle cache) so later timings
+        // don't pay its memory pressure — including the checkpoint
+        // blocks clearCache alone never frees (the long-JVM drift)
+        spark.catalog.clearCache()
+        releaseBlocks(spark)
+        // let the ContextCleaner reap dead shuffle files / broadcast
+        // blocks periodically instead of at heap pressure
+        sinceGc += 1
+        if (sinceGc >= 25) { sinceGc = 0; System.gc() }
+        (name, dt, ok)
+      }
+    } finally spark.sparkContext.removeSparkListener(metrics)
+    val failed = runs.filterNot(_._3).map(_._1).distinct.sorted
+    val timings = runs.filterNot(r => failed.contains(r._1))
+      .groupBy(_._1).map { case (n, vs) => n -> vs.map(_._2).min }
+      .toSeq.sortBy(_._1)
+    Sweep(timings, failed)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -35,7 +117,9 @@ object Bench {
     // warmup: touch every table once (classload + parquet footer reads)
     graft.sources.Tables.all.foreach { n =>
       try graft.sources.Tables.load(spark, sfDir, n).count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup load of $n failed: ${e.getMessage}")
+      }
     }
     // warmup 2: run the heavy expression families once on tiny slices
     // so JIT/codegen compilation of the vector + shingle hot paths is
@@ -154,30 +238,17 @@ object Bench {
       // blocks are below noise and die with RDD GC
       spark.catalog.clearCache()
       releaseBlocks(spark)
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      // a broken warmup leaves later rows paying first-touch cost:
+      // say so instead of silently skewing the timings
+      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+    }
 
     // SPARK_GRAFT_ONLY=q1_pricing_summary,q8_star_join → bench a
     // subset; blank means "all", not "none"
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
-    // wall vs process-CPU vs GC diagnostics per query: if a query's
-    // wall time balloons while cpu/wall stays far below the core
-    // count and GC is idle, the slowdown is host-external (another
-    // tenant / scheduler stall), not this plan — that distinction is
-    // what separates "optimize the query" from "rerun the bench"
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def codeCacheUsedMb: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.contains("CodeHeap")).map(_.getUsage.getUsed).sum / (1 << 20)
-    }
     // SPARK_GRAFT_REPEAT=n → run the (filtered) set n times in THIS
     // JVM and report the per-query MINIMUM — the floor-adjudication
     // tool: a fresh-JVM solo run pays first-touch JIT/codegen that
@@ -185,46 +256,10 @@ object Bench {
     // cold singles aren't floor-comparable; the min over warm repeats
     // is. Default 1 = the driver contract, unchanged.
     val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1)
-    // scheduler-level per-query diagnostics (stderr only): job/stage/
-    // task counts + summed task time + shuffle bytes — the UI-less
-    // substitute for the stage table. taskTime ≈ wall × cores ⇒
-    // compute-bound; jobs high with taskTime ≪ wall ⇒ protocol-bound
-    // (sequential tiny actions), the two different optimization paths.
-    val metrics = BenchMetrics.install(spark.sparkContext)
-    var sinceGc = 0
-    val results = (1 to repeat).flatMap { round =>
+    val Sweep(results, failed) = sweep(spark, sfDir,
       SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-        .map { case (name, fn) =>
-        org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-        metrics.reset()
-        val t0 = System.nanoTime()
-        val cpu0 = osBean.getProcessCpuTime
-        val gc0 = gcMillis
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val cpuS = (osBean.getProcessCpuTime - cpu0) / 1e9
-        org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-        System.err.println(f"[bench] $name%-28s wall=$dt%8.2fs cpu=$cpuS%8.1fs " +
-          f"(${cpuS / dt}%4.1f cores) gc=${(gcMillis - gc0) / 1000.0}%6.1fs " +
-          f"codecache=${codeCacheUsedMb}%4dMB ${metrics.line}")
-        // isolate queries: drop persisted blocks an operator may have
-        // left behind (e.g. minhash's shingle cache) so later timings
-        // don't pay its memory pressure — including the checkpoint
-        // blocks clearCache alone never frees (the long-JVM drift)
-        spark.catalog.clearCache()
-        releaseBlocks(spark)
-        // let the ContextCleaner reap dead shuffle files / broadcast
-        // blocks periodically instead of at heap pressure
-        sinceGc += 1
-        if (sinceGc >= 25) { sinceGc = 0; System.gc() }
-        name -> dt
-      }
-    }.groupBy(_._1).map { case (n, vs) => n -> vs.map(_._2).min }
-      .toSeq.sortBy(_._1)
+        .filter { case (n, _) => only.forall(_.contains(n)) },
+      repeat)
     // millisecond precision keeps the line short (full-precision
     // doubles tripled its length and got the capture truncated)
     def r3(v: Double): String = BigDecimal(v)
@@ -232,8 +267,9 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failedJs,"sf":"$sfDir"}"""
     // The harness keeps only the LAST ~2000 chars of captured output
     // (BENCH_r03/r04 both have a 2000-char "tail" with "parsed":
     // null), and the full line is ~3k chars at 118 queries — so the
@@ -248,7 +284,7 @@ object Bench {
     val sb = new StringBuilder
     var kept = 0
     val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size},"queries":{"""
-    val tail0 = s"""},"elided":0,"full":"bench_result.json","sf":"$sfDir"}"""
+    val tail0 = s"""},"elided":0,"failed":$failedJs,"full":"bench_result.json","sf":"$sfDir"}"""
     sb.append(head)
     byCost.foreach { case (k, v) =>
       val ent = (if (kept > 0) "," else "") + "\"" + k + "\":" + r3(v)
@@ -257,6 +293,7 @@ object Bench {
       }
     }
     sb.append("},\"elided\":").append(results.size - kept)
+      .append(",\"failed\":").append(failedJs)
       .append(""","full":"bench_result.json","sf":"""").append(sfDir).append("\"}")
     val shortLine = sb.toString
     // attribution for the Tables schema memo (stderr diagnostic, not
@@ -287,5 +324,6 @@ object Bench {
     spark.stop()
     println(shortLine)
     Console.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

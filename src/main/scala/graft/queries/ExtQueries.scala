@@ -5228,9 +5228,10 @@ object ExtQueries {
             Map("t" -> Seq((1, Some(5L)), (9, Some(90L)))
               .toDF("k", "v")))
         }
-        s.read.parquet(s"$root/t/v=${bv.get}")
+        val doubled = s.read.parquet(s"$root/t/v=${bv.get}")
           .withColumn("v", col("v") * 2)
-          .write.mode("errorifexists").parquet(dst)
+        doubled.write.mode("errorifexists").parquet(dst)
+        Some(doubled.schema)
       }
       // the concurrent writer's k=9 row survived, doubled — a stale
       // derivation of the pre-interference version would have lost it

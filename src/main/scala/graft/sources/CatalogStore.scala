@@ -198,23 +198,51 @@ object CatalogStore {
   private def tableDir(root: String, name: String, v: Int) =
     new org.apache.hadoop.fs.Path(root, s"$name/v=$v")
 
-  /** Read a committed version dir with its parquet schema memoized
-    * per path. Every bare `spark.read.parquet(path)` pays a 1-task
-    * footer-inference job before the real work — the r13 bench
-    * scheduler profile measured the store-gate family at 30–80
-    * sequential jobs per gate with task time ≪ wall, a large share
-    * of them exactly these inference jobs. Version dirs are
-    * immutable once committed (erasure rewrites ROWS in place, never
-    * the schema; renames are a logical mapping; evolution lands in a
-    * NEW version dir), so the schema is a pure function of the path
-    * and inference needs to run once per JVM. A vacuumed dir leaves
-    * a dead entry, bounded by the number of version dirs this JVM
-    * ever read. This mirrors what manifest-carrying table formats do
-    * in production: the schema travels with table METADATA, and no
-    * read re-derives it from data files (guide §6).
+  /** The parquet schema of every version dir, keyed by path. A bare
+    * `spark.read.parquet(path)` pays a 1-task footer-inference job
+    * before the real work — the r13 bench scheduler profile measured
+    * the store-gate family at 30–80 sequential jobs per gate with
+    * task time ≪ wall, a large share of them exactly these inference
+    * jobs. INVARIANT: every version dir's entry is born at its
+    * rename. [[publishStaged]] records the schema of the data it
+    * staged at each `stage → v=N` rename (a put, replacing whatever
+    * a dropped-and-recreated store left at the same path), the
+    * rollback of that rename removes the entry again, and [[vacuum]]
+    * removes the entries of the dirs it deletes — no entry outlives
+    * its dir. Version dirs are immutable once committed (erasure
+    * rewrites ROWS in place, never the schema; renames are a logical
+    * mapping; evolution lands in a NEW version dir), so an entry
+    * never goes stale. Only a dir this JVM did not publish (another
+    * JVM's commit) is inferred, once, on its first read. This is what
+    * manifest-carrying table formats do: the schema travels with the
+    * commit's metadata, and no read re-derives it from data files.
     */
   private val dirSchemaMemo = new java.util.concurrent
     .ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+
+  /** The memoized schema of a version dir, if this JVM holds one. */
+  private[graft] def memoSchema(root: String, name: String,
+      v: Int): Option[org.apache.spark.sql.types.StructType] =
+    Option(dirSchemaMemo.get(tableDir(root, name, v).toString))
+
+  /** `s` as a parquet read serves it: file sources mark every column,
+    * array element and map value nullable, whatever the writer's
+    * frame said. Memo entries hold this form, so a recorded schema is
+    * exactly the one inference would have produced.
+    */
+  private def asServed(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def nullable(t: DataType): DataType = t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), true)
+      case other => other
+    }
+    nullable(s).asInstanceOf[StructType]
+  }
 
   private def readVersionDir(spark: SparkSession, root: String,
       name: String, v: Int): DataFrame = {
@@ -715,10 +743,8 @@ object CatalogStore {
     graft.operators.Layout
       .fileIndex(spark, tableDir(root, name, v).toString, cols)
       .write.parquet(tmp.toString)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new org.apache.hadoop.fs.Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    try fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)
+    try FsAtomic.renameNoReplace(fs,
+      spark.sparkContext.hadoopConfiguration, tmp, dst)
     catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException |
            _: java.io.IOException if fs.exists(dst) =>
@@ -1211,7 +1237,8 @@ object CatalogStore {
       try out = Some(publishStaged(spark, root, Seq.empty,
         txid = "restore", prior = target.tables, next = next,
         evolve = true, parent = parentV, target = refTarget,
-        constraints = target.constraints, renames = target.renames))
+        constraints = target.constraints, renames = target.renames,
+        stagedSchemas = Map.empty))
       catch {
         case e: CommitContentionException =>
           attempt += 1
@@ -1416,7 +1443,10 @@ object CatalogStore {
         .map(_.getPath.getName.stripPrefix("v=").toInt).sorted
       val doomed = vs.filterNot(v => referenced.contains((t, v)) ||
         liveClaimSet.contains(v) || liveCatSet.contains(v))
-      doomed.foreach(v => fs.delete(tableDir(root, t, v), true))
+      doomed.foreach { v =>
+        fs.delete(tableDir(root, t, v), true)
+        dirSchemaMemo.remove(tableDir(root, t, v).toString)
+      }
       t -> doomed
     }.filter(_._2.nonEmpty).toMap
     CatalogVacuum((doomedCats ++ deadClaims).distinct.sorted, droppedTv)
@@ -1786,7 +1816,8 @@ object CatalogStore {
         renamesAt(spark, root, parentV))
       try out = Some(publishStaged(spark, root, Seq.empty,
         txid = "meta", prior, next, evolve = true, parent = parentV,
-        target = target, constraints = mergedCs, renames = mergedRn))
+        target = target, constraints = mergedCs, renames = mergedRn,
+        stagedSchemas = Map.empty))
       catch {
         case e: CommitContentionException =>
           attempt += 1
@@ -1805,8 +1836,11 @@ object CatalogStore {
     * silently erases that writer's rows (classic lost update — the
     * optimistic-concurrency conflict Delta detects with
     * ConcurrentModificationException; here the loop RE-DERIVES
-    * instead of failing). `derive(base, dst)` writes the staged
-    * content for base into `dst`; the loop re-invokes it whenever the
+    * instead of failing). `derive(base, chain, dst)` writes the
+    * staged content for base into `dst` and returns the schema of the
+    * flat parquet dir it wrote — or None when only inference can tell
+    * it (a hive-partitioned layout, whose partition-column types come
+    * from directory names); the loop re-invokes it whenever the
     * table's version at the claimed frontier differs from the one the
     * stage dir was derived for, so what lands is always a derivation
     * of the version it replaces. Constraint enforcement (`enforce`)
@@ -1816,7 +1850,8 @@ object CatalogStore {
       name: String, ref: String, contentionTimeoutMs: Long,
       evolve: Boolean, enforce: Boolean,
       extraTables: Map[String, DataFrame] = Map.empty)(
-      derive: (Option[Int], Seq[(String, String)], String) => Unit)
+      derive: (Option[Int], Seq[(String, String)], String) =>
+        Option[org.apache.spark.sql.types.StructType])
       : CatalogTx = {
     require(!extraTables.contains(name),
       s"extraTables may not shadow the derived table $name")
@@ -1826,6 +1861,8 @@ object CatalogStore {
     val deadline = System.currentTimeMillis + contentionTimeoutMs
     var attempt = 0
     var stagedFor: Option[Option[Int]] = None
+    var schemas: Map[String, org.apache.spark.sql.types.StructType] =
+      extraTables.map { case (n, df) => n -> df.schema }
     var validatedSig: Option[Set[Constraint]] = None
     var out: Option[CatalogTx] = None
     try {
@@ -1856,22 +1893,26 @@ object CatalogStore {
           // version is a fresh physical generation, so renames older
           // than it fold into its bytes (correctly not re-applied on
           // read — its tv postdates their atVersion)
-          derive(base, base.map(v => renameChain(rn, name, v))
-            .getOrElse(Seq.empty), stageDir(root, name, txid).toString)
+          val dst = stageDir(root, name, txid).toString
+          val sch = derive(base, base.map(v => renameChain(rn, name, v))
+            .getOrElse(Seq.empty), dst)
+            .getOrElse(spark.read.parquet(dst).schema)
+          schemas += name -> sch
           stagedFor = Some(base)
           validatedSig = None
         }
         val cs = constraintsAt(spark, root, parentV)
         if (enforce && !validatedSig.contains(cs.toSet)) {
           enforceConstraints(spark,
-            t => spark.read.parquet(stageDir(root, t, txid).toString),
+            t => spark.read.schema(schemas(t))
+              .parquet(stageDir(root, t, txid).toString),
             (name +: extraTables.keys.toSeq), cs)
           validatedSig = Some(cs.toSet)
         }
         try out = Some(publishStaged(spark, root,
           (name +: extraTables.keys.toSeq).sorted, txid,
           prior, next, evolve, parentV, target, constraints = cs,
-          renames = rn))
+          renames = rn, stagedSchemas = schemas))
         catch {
           case e: CommitContentionException =>
             attempt += 1
@@ -1928,6 +1969,7 @@ object CatalogStore {
         case None => updates
       }
       merged.write.mode("errorifexists").parquet(dst)
+      Some(merged.schema)
     }
   }
 
@@ -1953,6 +1995,7 @@ object CatalogStore {
         case None => rows
       }
       out.write.mode("errorifexists").parquet(dst)
+      Some(out.schema)
     }
 
   /** Row-level DELETE on a catalog table: rows where `predicate` is
@@ -1971,9 +2014,10 @@ object CatalogStore {
       val v = base.getOrElse(throw new IllegalArgumentException(
         s"table $name does not exist on ref $ref"))
       import org.apache.spark.sql.functions.{coalesce, lit, not}
-      applyChain(readVersionDir(spark, root, name, v), chain)
+      val kept = applyChain(readVersionDir(spark, root, name, v), chain)
         .filter(coalesce(not(predicate), lit(true)))
-        .write.mode("errorifexists").parquet(dst)
+      kept.write.mode("errorifexists").parquet(dst)
+      Some(kept.schema)
     }
 
   /** Catalog-integrated OPTIMIZE — the Delta OPTIMIZE / Iceberg
@@ -2018,31 +2062,40 @@ object CatalogStore {
       def bytesOf = math.max(1L, fs.listStatus(src).toSeq
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .map(_.getLen).sum)
+      // the staged schema is the base's logical one for every FLAT
+      // rewrite; a hive-partitioned result returns None and is
+      // inferred, since its partition-column types come from
+      // directory names
       if (zorderCols.nonEmpty) {
         val df = applyChain(readVersionDir(spark, root, name, v), chain)
         val nFiles = zorderFiles.getOrElse(math.max(1, math.ceil(
           bytesOf.toDouble / targetBytes).toInt))
         graft.operators.Layout.zorderWrite(df, zorderCols, zorderBits,
           nFiles, dst, partitionBy)
+        if (partitionBy.isEmpty) Some(df.schema) else None
       } else if (chain.nonEmpty) {
         // the first OPTIMIZE after a rename folds the mapping into a
         // fresh physical generation — a full logical rewrite (the
         // byte-copy rule can't keep files whose embedded names are
         // stale); later optimizes byte-copy again
-        applyChain(readVersionDir(spark, root, name, v), chain)
-          .repartition(math.max(1, math.ceil(
+        val df = applyChain(readVersionDir(spark, root, name, v), chain)
+        df.repartition(math.max(1, math.ceil(
             bytesOf.toDouble / targetBytes).toInt))
           .write.mode("errorifexists").parquet(dst)
+        Some(df.schema)
       } else {
         val partitioned = fs.listStatus(src).exists(e =>
           e.isDirectory && { val n = e.getPath.getName
             !n.startsWith("_") && !n.startsWith(".") })
-        if (partitioned)
+        if (partitioned) {
           graft.operators.Layout.compactPartitioned(spark,
             src.toString, dst, targetBytes)
-        else
+          None
+        } else {
           graft.operators.Layout.compactTo(spark, src.toString, dst,
             targetBytes)
+          Some(readVersionDir(spark, root, name, v).schema)
+        }
       }
     }
     // maintenance rides the optimize like it rides commit: both
@@ -2232,7 +2285,7 @@ object CatalogStore {
         publishStaged(spark, root, Seq.empty, txid = "merge",
           prior, next, evolve = true, parent = parentV,
           target = MainRef, extraEntries = branchEntries,
-          constraints = cs, renames = rn)
+          constraints = cs, renames = rn, stagedSchemas = Map.empty)
         out = Some(Merge(next, ff, branchEntries.keys.toSeq.sorted))
       } catch {
         case e: CommitContentionException =>
@@ -2428,21 +2481,20 @@ object CatalogStore {
     *
     * Runs BEFORE the claim — a wrong-shaped commit never blocks
     * another writer, and the rollback leaves the store
-    * byte-identical. Footer reads only (schema, never data).
+    * byte-identical. No data is read: the staged schema comes from
+    * the publisher, the committed one from the schema memo.
     */
   private def checkSchemas(spark: SparkSession, root: String,
-      names: Seq[String], txid: String, prior: Map[String, Int],
-      evolve: Boolean, renames: Seq[Rename] = Seq.empty,
+      names: Seq[String], prior: Map[String, Int], evolve: Boolean,
+      renames: Seq[Rename],
       stagedSchemas: Map[String,
-        org.apache.spark.sql.types.StructType] = Map.empty): Unit =
+        org.apache.spark.sql.types.StructType]): Unit =
     names.foreach { n =>
       prior.get(n).foreach { pv =>
-        // when the publisher handed us the DataFrame it staged, its
-        // schema IS the staged schema — skip the footer-inference
-        // job (commitDerived stages deriver-written bytes, so it
-        // still infers)
-        val staged = stagedSchemas.getOrElse(n, spark.read
-          .parquet(stageDir(root, n, txid).toString).schema)
+        // the publisher hands over the schema of what it staged, so
+        // the staged side costs no footer read; the committed side is
+        // a memo hit for every dir this JVM published
+        val staged = stagedSchemas(n)
         // the committed side compares by its LOGICAL names — the
         // column-mapping chain applied, so a commit after a rename
         // must carry the renamed name (its staged bytes ARE the new
@@ -2496,7 +2548,7 @@ object CatalogStore {
       constraints: Seq[Constraint] = Seq.empty,
       renames: Seq[Rename] = Seq.empty,
       stagedSchemas: Map[String,
-        org.apache.spark.sql.types.StructType] = Map.empty): CatalogTx = {
+        org.apache.spark.sql.types.StructType]): CatalogTx = {
     // the catalog-format guard lives HERE, on the choke point every
     // publish path funnels through (commit, commitDerived/upsert-
     // first-publish, merge extras) — a tab/newline in a table name
@@ -2510,7 +2562,7 @@ object CatalogStore {
           "(no leading '#', no tab/newline/slash)"))
     val fs = fsOf(spark, root)
     val conf = spark.sparkContext.hadoopConfiguration
-    checkSchemas(spark, root, names, txid, prior, evolve, renames,
+    checkSchemas(spark, root, names, prior, evolve, renames,
       stagedSchemas)
     val claim = claimFile(root, next)
     try FsAtomic.createExclusive(fs, claim)
@@ -2537,18 +2589,15 @@ object CatalogStore {
       // claim (its writer flipped and released) — rewalk, don't touch
       if (fs.exists(catFile(root, next)))
         throw new CommitContentionException(next, null)
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        new org.apache.hadoop.fs.Path(root).toUri, conf)
       names.foreach { n =>
-        fc.rename(stageDir(root, n, txid), tableDir(root, n, next),
-          org.apache.hadoop.fs.Options.Rename.NONE)
-        // staleness guard (r14): a store dropped and re-created at the
-        // same root restarts version numbers, so this path may have
-        // carried a DIFFERENT schema in a previous table lifetime.
-        // Every version dir is born through exactly this rename, so
-        // dropping the memo entry here makes the memo's immutability
-        // assumption true by construction.
-        dirSchemaMemo.remove(tableDir(root, n, next).toString)
+        FsAtomic.renameNoReplace(fs, conf, stageDir(root, n, txid),
+          tableDir(root, n, next))
+        // the memo entry is born here, with the dir: every version
+        // dir comes into being through exactly this rename, and the
+        // put REPLACES whatever a store dropped and re-created at the
+        // same root (version numbers restart) left at this path
+        dirSchemaMemo.put(tableDir(root, n, next).toString,
+          asServed(stagedSchemas(n)))
         renamed ::= n
       }
       val map = prior ++ names.map(_ -> next) ++ extraEntries
@@ -2637,10 +2686,9 @@ object CatalogStore {
           // a retry stays metadata-only; never delete a v-dir we did
           // not stage
           renamed.foreach { n =>
-            try org.apache.hadoop.fs.FileContext.getFileContext(
-                new org.apache.hadoop.fs.Path(root).toUri, conf)
-              .rename(tableDir(root, n, next), stageDir(root, n, txid),
-                org.apache.hadoop.fs.Options.Rename.NONE)
+            dirSchemaMemo.remove(tableDir(root, n, next).toString)
+            try FsAtomic.renameNoReplace(fs, conf, tableDir(root, n, next),
+              stageDir(root, n, txid))
             catch { case _: Exception => () } // vacuum sweeps leftovers
           }
           fs.delete(tmp, false)

@@ -114,8 +114,9 @@ class CatalogDmlSpec extends SparkSpec {
         }
         // the derivation doubles cents of whatever the base serves
         val src = spark.read.parquet(s"$root/t/v=${base.get}")
-        src.withColumn("cents", col("cents") * 2)
-          .write.mode("errorifexists").parquet(dst)
+        val doubled = src.withColumn("cents", col("cents") * 2)
+        doubled.write.mode("errorifexists").parquet(dst)
+        Some(doubled.schema)
     }
     // first derivation saw v1, the loop detected v2 and re-derived
     assert(derivedFor.toSeq == Seq(Some(1), Some(2)))

@@ -77,11 +77,20 @@ class CatalogStoreSpec extends SparkSpec {
       "a" -> orders.limit(100), "b" -> b1))          // cat 1: a1, b1
     CatalogStore.commit(spark, root, Map("a" -> orders.limit(80))) // 2
     CatalogStore.commit(spark, root, Map("a" -> orders.limit(60))) // 3
+    // every published version dir holds a schema memo entry
+    assert(Seq(1, 2, 3).forall(v =>
+      CatalogStore.memoSchema(root, "a", v).isDefined))
     val vac = CatalogStore.vacuum(spark, root, keep = 1)
     assert(vac.catalogs == Seq(1, 2))
     // a's superseded versions go; b's v1 is CARRIED by catalog 3 and
     // must survive although catalog 1 (its commit) was dropped
     assert(vac.tableVersions == Map("a" -> Seq(1, 2)))
+    // no memo entry outlives its dir: the deleted versions' go with
+    // them, the survivors' stay
+    assert(CatalogStore.memoSchema(root, "a", 1).isEmpty &&
+      CatalogStore.memoSchema(root, "a", 2).isEmpty)
+    assert(CatalogStore.memoSchema(root, "a", 3).isDefined &&
+      CatalogStore.memoSchema(root, "b", 1).isDefined)
     assert(CatalogStore.catalogVersions(spark, root) == Seq(3))
     val snap = CatalogStore.snapshot(spark, root)
     assert(snap.tables == Map("a" -> 3, "b" -> 1))
@@ -600,6 +609,100 @@ class CatalogStoreSpec extends SparkSpec {
     assert(got.schema.fieldNames.toSeq == Seq("price", "qty", "tag"))
     assert(got.collect().map(_.toSeq).toSeq ==
       Seq(Seq(1.5, 7, "x")))
+  }
+
+  /** One frame of every column kind the schema memo must carry
+    * exactly: non-nullable, decimal, date, timestamp, array<struct>,
+    * map, column metadata and a VectorUDT column.
+    */
+  private def allKinds(n: Int, offset: Long = 0L) = {
+    import org.apache.spark.sql.types.MetadataBuilder
+    val md = new MetadataBuilder().putString("comment", "kept").build()
+    spark.range(offset, offset + n).select(
+      col("id").as("k"),
+      (col("id") * 1.5).cast("decimal(12,3)").as("dec"),
+      expr("date_add(date'2024-01-01', cast(id as int))").as("d"),
+      expr("timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, " +
+        "cast(id as int))").as("ts"),
+      array(struct(col("id").as("x"), lit("s").as("y"))).as("arr"),
+      map(lit("a"), col("id")).as("m"),
+      col("id").as("tagged", md),
+      org.apache.spark.ml.functions.array_to_vector(
+        array(col("id").cast("double"), lit(1.0))).as("vec"),
+      concat(lit("p"), col("id") % 2).as("part"))
+  }
+
+  test("schema memo: every publish path records exactly the schema a " +
+      "fresh footer read infers") {
+    val root = Files.createTempDirectory("catmemo").toString
+    def memoIsInferred(t: String): Unit = {
+      val v = CatalogStore.snapshot(spark, root).tables(t)
+      val inferred = spark.read.parquet(s"$root/$t/v=$v").schema
+      assert(CatalogStore.memoSchema(root, t, v).contains(inferred),
+        s"$t v$v: memo ${CatalogStore.memoSchema(root, t, v)} vs " +
+          s"inferred $inferred")
+    }
+    assert(allKinds(1).schema("k").nullable == false)
+    CatalogStore.commit(spark, root, Map("t" -> allKinds(6),
+      "e" -> allKinds(0)))
+    memoIsInferred("t"); memoIsInferred("e")
+    CatalogStore.commitAs(spark, root, Map("e" -> allKinds(0)),
+      Seq.empty, next = 2)
+    memoIsInferred("e")
+    CatalogStore.upsertTable(spark, root, "t", allKinds(3, 4L), Seq("k"))
+    memoIsInferred("t")
+    CatalogStore.upsertTableWith(spark, root, "t", allKinds(2, 8L),
+      Seq("k"), Map("side" -> allKinds(1)))
+    memoIsInferred("t"); memoIsInferred("side")
+    CatalogStore.appendTable(spark, root, "t", allKinds(2, 20L))
+    memoIsInferred("t")
+    CatalogStore.deleteWhere(spark, root, "t", col("k") > 20)
+    memoIsInferred("t")
+    CatalogStore.deleteWhere(spark, root, "e", lit(true))
+    memoIsInferred("e")
+    CatalogStore.optimizeTable(spark, root, "t")             // flat compaction
+    memoIsInferred("t")
+    CatalogStore.optimizeTable(spark, root, "t", zorderCols = Seq("k"))
+    memoIsInferred("t")
+    // hive-partitioned: the partition column moves to the end and
+    // takes its type from directory names — inferred, then recorded
+    CatalogStore.optimizeTable(spark, root, "t", zorderCols = Seq("k"),
+      partitionBy = Seq("part"))
+    memoIsInferred("t")
+    CatalogStore.optimizeTable(spark, root, "t")     // partitioned compaction
+    memoIsInferred("t")
+    assert(CatalogStore.readCurrent(spark, root, "t").count() == 10)
+  }
+
+  test("schema memo: reading a version right after its publish starts " +
+      "no inference job") {
+    val root = Files.createTempDirectory("catmemojobs").toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsToRead(): Int = {
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      jobs.set(0)
+      CatalogStore.readCurrent(spark, root, "t")
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      CatalogStore.commit(spark, root, Map("t" -> allKinds(4)))
+      assert(jobsToRead() == 0, "after commit")
+      CatalogStore.upsertTable(spark, root, "t", allKinds(2, 3L), Seq("k"))
+      assert(jobsToRead() == 0, "after upsertTable")
+      CatalogStore.appendTable(spark, root, "t", allKinds(1, 9L))
+      assert(jobsToRead() == 0, "after appendTable")
+      CatalogStore.deleteWhere(spark, root, "t", col("k") === 0L)
+      assert(jobsToRead() == 0, "after deleteWhere")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(CatalogStore.readCurrent(spark, root, "t").count() == 5)
   }
 }
 

@@ -7,7 +7,8 @@ import graft.sources.FsAtomic
 /** The conditional-write (pointer CAS) primitive: within one JVM the
   * per-path lock makes check-then-write atomic — the forward-only
   * invariant holds even when the race window between the check and
-  * the write is widened adversarially.
+  * the write is widened adversarially. And the fail-if-exists
+  * directory rename every version-dir publish goes through.
   */
 class FsAtomicSpec extends SparkSpec {
 
@@ -71,5 +72,66 @@ class FsAtomicSpec extends SparkSpec {
       assert(read(fs, p).contains("7"),
         s"pointer regressed to ${read(fs, p)} — the window interleaved")
     } finally FsAtomic.casWindowHook = () => ()
+  }
+
+  private def staged(): (org.apache.hadoop.fs.FileSystem,
+      org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = {
+    val dir = Files.createTempDirectory("rnr").toString
+    val src = new org.apache.hadoop.fs.Path(dir, "stage")
+    spark.range(5).write.parquet(src.toString)
+    (src.getFileSystem(conf), src, new org.apache.hadoop.fs.Path(dir, "v=1"))
+  }
+
+  // listed through NIO: ChecksumFileSystem.listStatus hides `.crc`
+  private def names(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(java.nio.file.Paths.get(p.toUri.getPath))
+    try ls.iterator.asScala.map(_.getFileName.toString).toSet
+    finally ls.close()
+  }
+
+  test("renameNoReplace onto an existing EMPTY dir throws and leaves " +
+      "both dirs intact") {
+    val (fs, src, dst) = staged()
+    val before = names(fs, src)
+    fs.mkdirs(dst)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      FsAtomic.renameNoReplace(fs, conf, src, dst)
+    }
+    assert(names(fs, src) == before)
+    assert(fs.getFileStatus(dst).isDirectory && names(fs, dst).isEmpty)
+  }
+
+  test("renameNoReplace onto an existing NON-EMPTY dir throws and " +
+      "leaves both dirs intact") {
+    val (fs, src, dst) = staged()
+    val before = names(fs, src)
+    fs.mkdirs(dst)
+    Files.write(java.nio.file.Paths.get(dst.toUri.getPath, "keep"),
+      "x".getBytes("UTF-8"))
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      FsAtomic.renameNoReplace(fs, conf, src, dst)
+    }
+    assert(names(fs, src) == before)
+    assert(names(fs, dst) == Set("keep"))
+  }
+
+  test("renameNoReplace moves the dir with its .crc sidecars; the " +
+      "moved bytes still verify") {
+    val (fs, src, dst) = staged()
+    val before = names(fs, src)
+    assert(before.exists(_.endsWith(".crc")), before)
+    FsAtomic.renameNoReplace(fs, conf, src, dst)
+    assert(!fs.exists(src))
+    assert(names(fs, dst) == before)
+    // checksummed reads of every moved file pass
+    fs.listStatus(dst).filter(f => f.isFile &&
+        !f.getPath.getName.startsWith(".")).foreach { f =>
+      val in = fs.open(f.getPath)
+      try org.apache.commons.io.IOUtils.toByteArray(in)
+      finally in.close()
+    }
+    assert(spark.read.parquet(dst.toString).count() == 5)
   }
 }
